@@ -305,7 +305,7 @@ object CorpusOps {
   val q48 = QueryDef(
     "q48_greedy_packing",
     (s, d) => {
-      val t = staged("q48_t", d) {
+      val t = materialize("q48_t", d, Cache) {
         withViews(s, d, "documents")(s"""
           SELECT doc_id, lang,
                  CAST(size(split($sNorm, ' ')) AS BIGINT) AS n_tokens,
@@ -381,7 +381,7 @@ object CorpusOps {
       // chain the oracle runs): the interpreted lambda/regex spelling
       // re-walked each doc ~10× at ~1 ms/doc and was the single dominant
       // q50 stage at 64× (10.6 s of 11.6 s).
-      val feats = staged("q50_f", d) {
+      val feats = materialize("q50_f", d, Cache) {
         withViews(s, d, "documents")(s"""
           WITH c AS (SELECT doc_id, lang, corpus_features(text) AS cf
                      FROM documents),
@@ -405,7 +405,7 @@ object CorpusOps {
       // own CTE definitions — inside another WITH trips a second
       // optimizer bug (PushdownPredicatesAndPruneColumnsForCTEDef:
       // key not found on the nested CTE id). Same plan, no CTEs.
-      val ch = staged("q50_ch", d) {
+      val ch = materialize("q50_ch", d, Cache) {
         import s.implicits._
         import org.apache.spark.sql.functions.{min => fmin}
         import org.apache.spark.sql.expressions.Window
@@ -569,7 +569,7 @@ object CorpusOps {
   }
 
   /** BPE merge-table training: ONE corpus-scale Spark stage (word counts →
-    * top-`bpeVocab` via TakeOrdered, cached through [[Q.staged]] so t10 and
+    * top-`bpeVocab` via TakeOrdered, cached by [[Q.materialize]] so t10 and
     * t12 share it within a run and Bench's cold-run sweep still clears it),
     * then the whole merge loop on the DRIVER over the collected ≤`bpeVocab`
     * rows. The capped vocab frame is trained state, not data — the same
@@ -598,7 +598,7 @@ object CorpusOps {
     * passes from 2 to 1 (round-10 verdict item 1). */
   private[graft] def docHist(
       s: org.apache.spark.sql.SparkSession, d: String) =
-    staged("t12_doc_hist", d) {
+    materialize("t12_doc_hist", d, Cache) {
       withViews(s, d, "documents")("""
         SELECT doc_id, ascii_word_histogram(lower(text)) AS h
         FROM documents""")
@@ -617,7 +617,7 @@ object CorpusOps {
     * instead ([[t12Encode]]). */
   private[graft] def wordCounts(
       s: org.apache.spark.sql.SparkSession, d: String) =
-    staged("t10_wordcounts_full", d) {
+    materialize("t10_wordcounts_full", d, Cache) {
       withViews(s, d, "documents")("""
         SELECT word, CAST(sum(cnt) AS BIGINT) AS freq
         FROM (SELECT explode(ascii_word_histogram(lower(text))) AS (word, cnt)
@@ -744,7 +744,7 @@ object CorpusOps {
     // every stat is a count-weighted sum over the doc's distinct words
     // (exact BIGINTs — identical to summing per token occurrence).
     docHist(s, d).createOrReplaceTempView("t12_dh")
-    staged("t12_wordcounts_derived", d) {
+    materialize("t12_wordcounts_derived", d, Cache) {
       s.sql("""
         SELECT word, CAST(sum(cnt) AS BIGINT) AS freq
         FROM (SELECT explode(h) AS (word, cnt) FROM t12_dh)
@@ -899,7 +899,7 @@ object CorpusOps {
     * encode path (t14), which derives all three of its frames from it. */
   private[graft] def docHistBytes(
       s: org.apache.spark.sql.SparkSession, d: String) =
-    staged("t13_doc_hist", d) {
+    materialize("t13_doc_hist", d, Cache) {
       withViews(s, d, "documents")(s"""
         SELECT doc_id, space_token_histogram($sAugText) AS h
         FROM documents""")
@@ -912,7 +912,7 @@ object CorpusOps {
     * train-only-runs-stay-lean judgment as [[wordCounts]]. */
   private[graft] def wordCountsBytes(
       s: org.apache.spark.sql.SparkSession, d: String) =
-    staged("t13_wordcounts_full", d) {
+    materialize("t13_wordcounts_full", d, Cache) {
       withViews(s, d, "documents")(s"""
         SELECT word, CAST(sum(cnt) AS BIGINT) AS freq
         FROM (SELECT explode(space_token_histogram($sAugText)) AS (word, cnt)
@@ -1003,7 +1003,7 @@ object CorpusOps {
     // (train + distinct-word encode frame) and the per-doc aggregate —
     // [[t12Encode]]'s shape on the byte alphabet.
     docHistBytes(s, d).createOrReplaceTempView("t13_dh")
-    staged("t14_wordcounts_derived", d) {
+    materialize("t14_wordcounts_derived", d, Cache) {
       s.sql("""
         SELECT word, CAST(sum(cnt) AS BIGINT) AS freq
         FROM (SELECT explode(h) AS (word, cnt) FROM t13_dh)
@@ -1468,8 +1468,8 @@ object CorpusOps {
       // left inline, CTE inlining re-runs the corpus histogram pass per
       // reference (PlanAudit caught exactly that: 2x live documents scan)
       // — checkpoint it as a LEAF, it is vocabulary-width
-      stagedMaterialized("q70_p", d) {
-        roundCheckpoint(withViews(s, d, "documents")(s"""
+      materialize("q70_p", d, Checkpoint) {
+        withViews(s, d, "documents")(s"""
           WITH dh AS (SELECT doc_id % 2 AS snap, tok, cnt
                       FROM (SELECT doc_id,
                               explode(space_token_histogram($sNorm)) AS (tok, cnt)
@@ -1479,7 +1479,7 @@ object CorpusOps {
           SELECT tok,
                  CAST(sum(CASE WHEN snap = 0 THEN c ELSE 0 END) AS BIGINT) AS cnt_a,
                  CAST(sum(CASE WHEN snap = 1 THEN c ELSE 0 END) AS BIGINT) AS cnt_b
-          FROM tc GROUP BY tok"""))
+          FROM tc GROUP BY tok""")
       }.createOrReplaceTempView("q70_p")
       s.sql(s"""
         WITH tot AS (SELECT CAST(sum(cnt_a) AS BIGINT) AS na,

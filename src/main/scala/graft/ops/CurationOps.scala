@@ -28,7 +28,7 @@ object CurationOps {
     * not be editable in one consumer without the other).
     *
     * A DataFrame function, NOT a SQL CTE string: d19 stages its shingle
-    * frame once via [[Q.staged]], and a `createOrReplaceTempView` hop
+    * frame once via [[Q.materialize]], and a `createOrReplaceTempView` hop
     * over any plan containing the posexplode Generate defeats the
     * CacheManager's fragment match on Spark 4.1 (verified empirically —
     * the view-wrapped consumer re-plans the full FileScan and the corpus
@@ -151,7 +151,7 @@ object CurationOps {
       // two ~300-400 ms corpus passes at sf0.1). Staged once — d19's
       // DataFrame-composition pattern, NOT a temp-view hop, which
       // defeats the cache fragment match on a Generate-bearing plan.
-      val ch = staged("d11_chunks", d) {
+      val ch = materialize("d11_chunks", d, Cache) {
         withViews(s, d, "documents")(s"""
           WITH $sChunks
           SELECT doc_id, i, chunk FROM chunks""")
@@ -217,7 +217,7 @@ object CurationOps {
     (s, d) => {
       import s.implicits._
       import org.apache.spark.sql.functions.{countDistinct, when}
-      val pr = staged("d19_pr", d) {
+      val pr = materialize("d19_pr", d, Cache) {
         withViews(s, d, "documents")(s"""
           WITH toks AS (SELECT doc_id, split($sNorm, ' ') AS t FROM documents
                         WHERE length(text) >= 1)
@@ -273,7 +273,7 @@ object CurationOps {
       // bloom build, the candidate side, the semi-join's eval side) — one
       // corpus scan + chunk explode instead of three, and the cached frame
       // is narrow (id, source, md5), never the chunk text
-      val chunks = staged("d12_chunks", d) {
+      val chunks = materialize("d12_chunks", d, Cache) {
         withViews(s, d, "documents")(s"""
           WITH $sChunks
           SELECT doc_id, source, md5(chunk) AS h FROM chunks""")
@@ -352,7 +352,7 @@ object CurationOps {
       // both engines — the oracle filters tok <> '' so DuckDB's
       // string_split('') one-empty-token artifact never re-admits it
       // (TextSpec pins the engine half on a planted whitespace doc).
-      staged("t09_dh", d) {
+      materialize("t09_dh", d, Cache) {
         withViews(s, d, "documents")(s"""
           SELECT doc_id, space_token_histogram($sNorm) AS h
           FROM documents WHERE length(text) >= 1""")
@@ -436,7 +436,7 @@ object CurationOps {
   val t19 = QueryDef(
     "t19_quality_classifier",
     (s, d) => {
-      staged("t19_base", d) {
+      materialize("t19_base", d, Cache) {
         withViews(s, d, "documents")("""
           SELECT doc_id, h,
                  (cf.n_tokens BETWEEN 5 AND 1000)
@@ -613,7 +613,7 @@ object CurationOps {
     "d22_delete_propagation",
     (s, d) => {
       DedupOps.d06.run(s, d).createOrReplaceTempView("d22_lab")
-      staged("d22_mem", d) {
+      materialize("d22_mem", d, Cache) {
         withViews(s, d, "documents")("""
           SELECT l.cluster_id, l.doc_id, doc.n_chars
           FROM d22_lab l JOIN documents doc ON l.doc_id = doc.doc_id""")
@@ -789,9 +789,9 @@ object CurationOps {
       // checkpointed leaf: the fingerprint frame feeds the new/old split,
       // both near-dup join sides, and the output join — inlined, the
       // normalize+md5 pass re-ran per reference (PlanAudit: 12 live scans)
-      val fps = stagedMaterialized("d15_fps", d) {
-        roundCheckpoint(withViews(s, d, "documents")(s"""
-          SELECT doc_id, md5($sNorm) AS fp FROM documents"""))
+      val fps = materialize("d15_fps", d, Checkpoint) {
+        withViews(s, d, "documents")(s"""
+          SELECT doc_id, md5($sNorm) AS fp FROM documents""")
       }
       fps.createOrReplaceTempView("d15_fps")
       DedupOps.d02Pairs(s, d).createOrReplaceTempView("d15_pairs")
@@ -1043,16 +1043,16 @@ object CurationOps {
       // match (PlanAudit round 12: the vocab pass tokenized the corpus
       // once per reference and the bigram stream rebuilt per consumer —
       // the materialized boundary this staging always intended)
-      stagedMaterialized("t11_v", d) {
-        roundCheckpoint(withViews(s, d, "documents")(s"""
+      materialize("t11_v", d, Checkpoint) {
+        withViews(s, d, "documents")(s"""
           SELECT word FROM (
             SELECT wd AS word, count(*) AS freq
             FROM (SELECT explode(regexp_extract_all(lower(text), '[a-z]+', 0)) AS wd
                   FROM documents)
-            GROUP BY wd ORDER BY freq DESC, word LIMIT $lmVocab)"""))
+            GROUP BY wd ORDER BY freq DESC, word LIMIT $lmVocab)""")
       }.createOrReplaceTempView("t11_v")
-      stagedMaterialized("t11_mb", d) {
-        roundCheckpoint(withViews(s, d, "documents")(s"""
+      materialize("t11_mb", d, Checkpoint) {
+        withViews(s, d, "documents")(s"""
           WITH w AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+', 0) AS ws
                      FROM documents),
           bg AS (SELECT doc_id, pr.w1 AS w1, pr.w2 AS w2
@@ -1063,7 +1063,7 @@ object CurationOps {
                  CASE WHEN v1.word IS NULL THEN '<unk>' ELSE bg.w1 END AS w1,
                  CASE WHEN v2.word IS NULL THEN '<unk>' ELSE bg.w2 END AS w2
           FROM bg LEFT JOIN t11_v v1 ON bg.w1 = v1.word
-                  LEFT JOIN t11_v v2 ON bg.w2 = v2.word"""))
+                  LEFT JOIN t11_v v2 ON bg.w2 = v2.word""")
       }.createOrReplaceTempView("t11_mb")
       s.sql(s"""
         WITH lm AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS c12
@@ -1154,8 +1154,8 @@ object CurationOps {
     "d18_importance_select",
     (s, d) => {
       val targetIn = dsirTargets.map(t => s"'$t'").mkString("(", ", ", ")")
-      stagedMaterialized("d18_ng", d) {
-        roundCheckpoint(withViews(s, d, "documents")(s"""
+      materialize("d18_ng", d, Checkpoint) {
+        withViews(s, d, "documents")(s"""
           WITH w AS (SELECT doc_id, source,
                        regexp_extract_all(lower(text), '[a-z]+', 0) AS ws
                      FROM documents WHERE length(text) >= 1)
@@ -1165,7 +1165,7 @@ object CurationOps {
                     THEN concat(ws, transform(sequence(0, size(ws) - 2),
                            i -> concat(ws[i], ' ', ws[i + 1])))
                     ELSE ws END) AS g
-                FROM w WHERE size(ws) >= 1)"""))
+                FROM w WHERE size(ws) >= 1)""")
       }.createOrReplaceTempView("d18_ng")
       s.sql(s"""
         WITH cnt AS (SELECT b, CAST(count(*) AS BIGINT) AS cr,
@@ -1251,7 +1251,7 @@ object CurationOps {
     // trips Spark 4.1's PushdownPredicatesAndPruneColumnsForCTEDef
     // ("key not found: 0") — the optimizer gathers CTE defs across the
     // view boundary and misses the inner id
-    staged("q69_sh", d) {
+    materialize("q69_sh", d, Cache) {
       withViews(s, d, "documents")(s"""
         SELECT DISTINCT source, md5(chunk) AS h
         FROM (SELECT source, array_join(slice(t, i * $W + 1, $W), ' ') AS chunk
@@ -1261,7 +1261,7 @@ object CurationOps {
                           FROM documents WHERE length(text) >= 1) toks) n
               LATERAL VIEW explode(sequence(0, nch - 1)) x AS i) chunks""")
     }.createOrReplaceTempView("q69_sh")
-    staged(s"q69_sf_$cap", d) {
+    materialize(s"q69_sf_$cap", d, Cache) {
       s.sql(s"""
         SELECT sh.source, sh.h FROM q69_sh sh
         JOIN (SELECT h FROM q69_sh GROUP BY h
@@ -1350,16 +1350,16 @@ object CurationOps {
   val q69 = QueryDef(
     "q69_source_pagerank",
     (s, d) => {
-      stagedMaterialized("q69_edges", d) {
-        roundCheckpoint(pagerankEdges(s, d, pagerankCap))
+      materialize("q69_edges", d, Checkpoint) {
+        pagerankEdges(s, d, pagerankCap)
       }.createOrReplaceTempView("q69_edges")
       // the node set is ALSO a multiply-referenced CTE (cnt, r0, every
       // iteration, the readout — PlanAudit counted 9 live corpus scans
       // when it was left inline); as a leaf the iteration SQL touches
       // documents zero times
-      stagedMaterialized("q69_nodes", d) {
-        roundCheckpoint(withViews(s, d, "documents")(
-          "SELECT DISTINCT source FROM documents"))
+      materialize("q69_nodes", d, Checkpoint) {
+        withViews(s, d, "documents")(
+          "SELECT DISTINCT source FROM documents")
       }.createOrReplaceTempView("q69_nodes")
       s.sql(s"""
         WITH nodes AS (SELECT source FROM q69_nodes),
@@ -1438,7 +1438,7 @@ object CurationOps {
   val d26 = QueryDef(
     "d26_split_leakage_audit",
     (s, d) => {
-      stagedMaterialized("d26_split", d) { roundCheckpoint(q54.run(s, d)) }
+      materialize("d26_split", d, Checkpoint) { q54.run(s, d) }
         .createOrReplaceTempView("d26_split")
       DedupOps.d02Pairs(s, d).createOrReplaceTempView("d26_pairs")
       graft.functions.GraftFunctions.register(s)

@@ -69,7 +69,7 @@ object DedupOps {
     * materialized boundaries (checkpoint/exchange reuse). */
   private[graft] def d02Shingles(
       s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    val sh = staged("d02_sh", d) {
+    val sh = materialize("d02_sh", d, Cache) {
       withViews(s, d, "documents")("""
         SELECT doc_id, sset FROM
           (SELECT doc_id, shingle_set(text, 3) AS sset FROM documents)
@@ -85,7 +85,7 @@ object DedupOps {
     * to true near-dups) and d25 (which audits its precision). */
   private[graft] def d02Candidates(
       s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    staged("d02_cand", d) {
+    materialize("d02_cand", d, Cache) {
       d02Shingles(s, d)
       // band key spelled as unrolled element_at's (r is a load-time
       // constant), NOT a transform(...) lambda: this frame self-joins in
@@ -97,7 +97,7 @@ object DedupOps {
       val rowRefs = (1 to minhashRows)
         .map(i => s"CAST(element_at(sg, bj*$minhashRows + $i) AS STRING)")
         .mkString(", ")
-      val bands = staged("d02_bands", d) {
+      val bands = materialize("d02_bands", d, Cache) {
         s.sql(s"""
           WITH sig AS (SELECT doc_id, minhash_sig(sset, $minhashK) AS sg FROM d02_sh)
           SELECT doc_id, bj, concat_ws(',', $rowRefs) AS bkey
@@ -121,11 +121,12 @@ object DedupOps {
 
   /** Verify-stage spelling dial (`-Dgraft.d02.verify`, read once at load
     * like [[minhashBands]] so the staged frames can never mix spellings
-    * within a run). All four spellings produce the IDENTICAL
+    * within a run). Both spellings produce the IDENTICAL
     * (doc_a, doc_b, n_shared, n_union) frame — exact integer set counts
     * (LshAuditSpec pins row-identity) — they differ only in what the
     * verify stage's exchanges CARRY. Measured at 64× (13.6 M candidates,
-    * SCALE.md "round 14: the d02 verify exchange A/B"):
+    * SCALE.md "round 14: the d02 verify exchange A/B", which also records
+    * the rejected `classes` and `explode` spellings):
     *
     *  - `sets` (default): join the candidate pairs to the shingle-SET
     *    frame twice, count overlap with the allocation-free
@@ -139,20 +140,7 @@ object DedupOps {
     *    stays narrow end to end, no array-carrying exchange exists. The
     *    256× leg that survives this box. Requires the (doc_id, sset)
     *    dictionary to fit executor memory, so at true 100 TB the dial
-    *    flips back to `sets` and the exchange spreads over the cluster.
-    *  - `classes`: collapse docs with IDENTICAL shingle sets into classes
-    *    first (d21's replication-invariant move), verify once per
-    *    DISTINCT class pair, map scores back over narrow joins. The
-    *    right economics for boilerplate-heavy corpora where exact-dup
-    *    collapse is massive; on the ScaleData corpus the per-replica
-    *    salt makes every sset distinct BY DESIGN, so classes degenerates
-    *    to sets + a window pass (measured 25-29 s at 64× — documented
-    *    rejection for THIS corpus, kept as the dial for corpora where
-    *    collapse is real).
-    *  - `explode`: count shared shingles by (doc, shingle) equi-join
-    *    aggregation — narrow rows only, but Σ|set| of them per candidate
-    *    (measured 90 s at 64×, and ~390 GB of exchange at 256× — worse
-    *    than the wall it was meant to avoid; measured rejection). */
+    *    flips back to `sets` and the exchange spreads over the cluster. */
   private[graft] val d02VerifySpelling =
     sys.props.getOrElse("graft.d02.verify", "sets")
 
@@ -166,114 +154,54 @@ object DedupOps {
     * respell, and [[d02VerifySpelling]] is where the respelling lives. */
   /** NOT staged/cached: the frame is consumed once per query (d02 filters
     * it, d25 projects it) and the expensive stages underneath
-    * ([[d02Shingles]], [[d02Candidates]], the class frame) are already
-    * shared caches — force-caching the scored output itself was measured
-    * at 64× as pure overhead on the verify pass (it materializes
-    * candidate-count rows nobody re-reads). */
+    * ([[d02Shingles]], [[d02Candidates]]) are already shared caches —
+    * force-caching the scored output itself was measured at 64× as pure
+    * overhead on the verify pass (it materializes candidate-count rows
+    * nobody re-reads). */
   private[graft] def d02ScoredCandidates(
       s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
     d02ScoredWith(s, d, d02VerifySpelling)
 
   /** [[d02ScoredCandidates]] at an explicit spelling — the A/B seam
-    * (LshAuditSpec proves the three spellings row-identical at the gate
+    * (LshAuditSpec proves the two spellings row-identical at the gate
     * corpus; the SCALE.md legs time them at 64×/256×). */
   private[graft] def d02ScoredWith(
       s: org.apache.spark.sql.SparkSession, d: String,
       spelling: String): org.apache.spark.sql.DataFrame = {
       import s.implicits._
-      import org.apache.spark.sql.functions.{expr, coalesce, lit}
+      import org.apache.spark.sql.functions.expr
       val sh = d02Shingles(s, d)
       val cand = d02Candidates(s, d)
-      spelling match {
-        case "sets" | "bcast" =>
-          // intersect_count, NOT size(array_intersect(...)): the alias is
-          // substituted through d02's filter and d25's derived columns
-          // (CollapseProject/PushDownPredicates), so the overlap evaluates
-          // 2-3x per row — the count-only expression keeps each
-          // evaluation allocation-free (measured: d02 34.4 -> ~22 s at 64x)
-          //
-          // bcast additionally BROADCASTS the shingle dictionary into both
-          // joins: with exchange-based joins the intermediate between them
-          // carries sa.sset per CANDIDATE row (candidates × ~2 KB arrays —
-          // the ~300 GB second-join shuffle that was the 256× disk wall);
-          // broadcast makes the array side move ONCE (corpus-linear) and
-          // the candidate stream stays narrow end to end. The dictionary
-          // must fit executor memory — corpus-linear, so at true 100 TB
-          // this dial flips back to `sets` and the exchange spreads over
-          // the cluster instead.
-          val dict =
-            if (spelling == "bcast") org.apache.spark.sql.functions.broadcast(sh)
-            else sh
-          cand
-            .join(dict.as("sa"), $"ida" === $"sa.doc_id")
-            .join(dict.as("sb"), $"idb" === $"sb.doc_id")
-            .select($"ida".as("doc_a"), $"idb".as("doc_b"),
-              expr("intersect_count(sa.sset, sb.sset)").as("n_shared"),
-              expr("CAST(size(sa.sset) AS BIGINT) + CAST(size(sb.sset) AS BIGINT)")
-                .as("n_total"))
-            .selectExpr("doc_a", "doc_b", "n_shared",
-              "n_total - n_shared AS n_union")
-        case "classes" =>
-          // doc → class (= min doc_id among docs with the identical sset):
-          // one window over the sset-keyed exchange; the frame is the
-          // corpus shingle volume once — the same bytes building d02_sh
-          // already moved — never candidates × arrays
-          val cls = staged("d02_cls", d) {
-            s.sql("""SELECT doc_id, sset,
-                            min(doc_id) OVER (PARTITION BY sset) AS cls
-                     FROM d02_sh""")
-          }
-          val docCls = cls.select($"doc_id", $"cls")
-          val reps = cls.where($"doc_id" === $"cls")
-            .select($"cls".as("rep"), $"sset")
-          val candC = cand
-            .join(docCls.as("ca"), $"ida" === $"ca.doc_id")
-            .join(docCls.as("cb"), $"idb" === $"cb.doc_id")
-            .select($"ida", $"idb",
-              expr("least(ca.cls, cb.cls)").as("clo"),
-              expr("greatest(ca.cls, cb.cls)").as("chi"))
-          // the ONLY array-carrying join: one row per DISTINCT class pair
-          // (replication-invariant — replicas share ssets, hence classes)
-          val scored = candC.select($"clo", $"chi").distinct()
-            .join(reps.as("ra"), $"clo" === $"ra.rep")
-            .join(reps.as("rb"), $"chi" === $"rb.rep")
-            .select($"clo", $"chi",
-              expr("intersect_count(ra.sset, rb.sset)").as("n_shared"),
-              expr("CAST(size(ra.sset) AS BIGINT) + CAST(size(rb.sset) AS BIGINT)")
-                .as("n_total"))
-            .selectExpr("clo", "chi", "n_shared", "n_total - n_shared AS n_union")
-          // NO broadcast hint: the score table is class-pair-bounded —
-          // tiny under replication/boilerplate collapse, but a corpus of
-          // all-distinct texts degenerates it to candidate-sized, and a
-          // forced broadcast there is a driver OOM. AQE reads the actual
-          // exchange size and broadcasts exactly when collapse happened.
-          candC.join(scored, Seq("clo", "chi"))
-            .select($"ida".as("doc_a"), $"idb".as("doc_b"),
-              $"n_shared", $"n_union")
-        case "explode" =>
-          val shx = staged("d02_shx", d) {
-            sh.selectExpr("doc_id", "explode(sset) AS shg")
-          }
-          val sz = sh.selectExpr("doc_id", "CAST(size(sset) AS BIGINT) AS sz")
-          val shared = cand
-            .join(shx.as("xa"), $"ida" === $"xa.doc_id")
-            .select($"ida", $"idb", $"xa.shg".as("shga"))
-            .join(shx.as("xb"),
-              $"idb" === $"xb.doc_id" && $"shga" === $"xb.shg")
-            .groupBy($"ida", $"idb")
-            .agg(org.apache.spark.sql.functions.count(lit(1)).as("n_shared"))
-          cand
-            .join(shared, Seq("ida", "idb"), "left")
-            .join(sz.as("za"), $"ida" === $"za.doc_id")
-            .join(sz.as("zb"), $"idb" === $"zb.doc_id")
-            .select($"ida".as("doc_a"), $"idb".as("doc_b"),
-              coalesce($"n_shared", lit(0L)).as("n_shared"),
-              (expr("za.sz + zb.sz") - coalesce($"n_shared", lit(0L)))
-                .as("n_union"))
+      // intersect_count, NOT size(array_intersect(...)): the alias is
+      // substituted through d02's filter and d25's derived columns
+      // (CollapseProject/PushDownPredicates), so the overlap evaluates
+      // 2-3x per row — the count-only expression keeps each evaluation
+      // allocation-free (measured: d02 34.4 -> ~22 s at 64x)
+      //
+      // bcast additionally BROADCASTS the shingle dictionary into both
+      // joins: with exchange-based joins the intermediate between them
+      // carries sa.sset per CANDIDATE row (candidates × ~2 KB arrays —
+      // the ~300 GB second-join shuffle that was the 256× disk wall);
+      // broadcast makes the array side move ONCE (corpus-linear) and the
+      // candidate stream stays narrow end to end. The dictionary must fit
+      // executor memory — corpus-linear, so at true 100 TB this dial
+      // flips back to `sets` and the exchange spreads over the cluster.
+      val dict = spelling match {
+        case "sets" => sh
+        case "bcast" => org.apache.spark.sql.functions.broadcast(sh)
         case other =>
           throw new IllegalArgumentException(
-            s"graft.d02.verify: unknown spelling '$other' (sets|bcast|classes|explode)")
+            s"graft.d02.verify: unknown spelling '$other' (sets|bcast)")
       }
+      cand
+        .join(dict.as("sa"), $"ida" === $"sa.doc_id")
+        .join(dict.as("sb"), $"idb" === $"sb.doc_id")
+        .select($"ida".as("doc_a"), $"idb".as("doc_b"),
+          expr("intersect_count(sa.sset, sb.sset)").as("n_shared"),
+          expr("CAST(size(sa.sset) AS BIGINT) + CAST(size(sb.sset) AS BIGINT)")
+            .as("n_total"))
+        .selectExpr("doc_a", "doc_b", "n_shared",
+          "n_total - n_shared AS n_union")
   }
 
   /** The ONE DuckDB spelling of the scored verify frame, shared by d02's
@@ -308,7 +236,7 @@ object DedupOps {
     headline = true)
 
   /** d02's verified near-dup pair list with TRUNCATED lineage (one
-    * [[Q.roundCheckpoint]]), shared by every composite consumer (d06
+    * [[Q.Checkpoint]]), shared by every composite consumer (d06
     * propagation, d07 decontam, d15 incremental). Two reasons, both
     * structural:
     *  - the consumers self-join or multi-reference the pairs, and with
@@ -323,8 +251,8 @@ object DedupOps {
     *    the same way is the scale-consistent shape, not a workaround. */
   private[graft] def d02Pairs(
       s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    staged("d02_pairs", d) {
-      roundCheckpoint(d02.run(s, d).select("doc_a", "doc_b"))
+    materialize("d02_pairs", d, Checkpoint) {
+      d02.run(s, d).select("doc_a", "doc_b")
     }
 
   /** LSH candidate-precision audit — the measurement that prices d02's
@@ -379,7 +307,7 @@ object DedupOps {
       d02Pairs(s, d).createOrReplaceTempView("q72_pairs")
       // the (doc_id, source) projection joins on BOTH pair sides — stage
       // it once or each side re-scans the corpus (PlanAudit caught it)
-      staged("q72_src", d) {
+      materialize("q72_src", d, Cache) {
         withViews(s, d, "documents")("SELECT doc_id, source FROM documents")
       }.createOrReplaceTempView("q72_src")
       s.sql("""
@@ -440,12 +368,12 @@ object DedupOps {
   val d04 = QueryDef(
     "d04_ngram_jaccard",
     (s, d) => {
-      val g = stagedMaterialized("d04_g", d) {
-        roundCheckpoint(withViews(s, d, "documents")("""
+      val g = materialize("d04_g", d, Checkpoint) {
+        withViews(s, d, "documents")("""
           SELECT doc_id, lang, source, grams, minhash_sig(grams, 16) AS sg FROM
             (SELECT doc_id, lang, source, shingle_set(text, 2) AS grams
              FROM documents)
-          WHERE size(grams) >= 1"""))
+          WHERE size(grams) >= 1""")
       }
       g.createOrReplaceTempView("d04_g")
       s.sql("""
@@ -542,18 +470,18 @@ object DedupOps {
       // normalize → distinct 3-shingles → md5, exploded to (rep, h) and
       // checkpointed — a LogicalRDD leaf, so the class-freq aggregate and
       // the self-join below re-read rows, never re-derive the explode
-      val g = stagedMaterialized("d21_g", d) {
-        roundCheckpoint(withViews(s, d, "documents")(s"""
+      val g = materialize("d21_g", d, Checkpoint) {
+        withViews(s, d, "documents")(s"""
           WITH cls AS (SELECT min(doc_id) AS rep, count(*) AS members,
                               min_by(text, doc_id) AS rtext
                        FROM documents GROUP BY md5($sNorm)),
           sh AS (SELECT rep, members, shingle_set(rtext, 3) AS sset FROM cls)
           SELECT rep, members, md5(s) AS h
-          FROM sh LATERAL VIEW explode(sset) x AS s"""))
+          FROM sh LATERAL VIEW explode(sset) x AS s""")
       }
       // (class, shingle, class-freq) over the capped vocabulary, staged
       // once: feeds the per-class size aggregate AND both self-join sides
-      val gk = staged("d21_gk", d) {
+      val gk = materialize("d21_gk", d, Cache) {
         val cf = g.groupBy($"h").agg(fcount("*").as("cf"))
           .where($"cf" <= containCap)
         g.join(cf, Seq("h")).select(col("rep"), col("members"), col("h"), col("cf"))
@@ -631,12 +559,12 @@ object DedupOps {
   // the view-hop consumers (d05/d16/d17) were re-normalizing per
   // reference (PlanAudit: 6 live embeddings scans in d05)
   private[graft] def normEmbeddings(s: org.apache.spark.sql.SparkSession, d: String) =
-    stagedMaterialized("d05_n", d) {
-      roundCheckpoint(withViews(s, d, "embeddings")("""
+    materialize("d05_n", d, Checkpoint) {
+      withViews(s, d, "embeddings")("""
         WITH e AS (SELECT vec_id, label,
                      transform(embedding, x -> CAST(x AS DOUBLE)) AS v
                    FROM embeddings)
-        SELECT vec_id, label, v, sqrt(dot_product(v, v)) AS nrm FROM e"""))
+        SELECT vec_id, label, v, sqrt(dot_product(v, v)) AS nrm FROM e""")
     }
 
   val d05 = QueryDef(
@@ -727,7 +655,7 @@ object DedupOps {
   private[graft] def clusterAssign(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
     normEmbeddings(s, d).createOrReplaceTempView("d16_n")
-    staged("d16_assign", d) {
+    materialize("d16_assign", d, Cache) {
       s.sql(s"""
         SELECT /*+ BROADCAST(cs) */ t.vec_id, t.label,
                nearest_centroid(t.v, t.nrm, cs.cents).cid AS cid
@@ -858,9 +786,6 @@ object DedupOps {
   private[graft] def ccUnroll: Int =
     math.max(1, sys.props.getOrElse("graft.cc.unroll", "4").toInt)
 
-  private[graft] def ccDebug: Boolean =
-    sys.props.get("graft.cc.debug").contains("true")
-
   private[graft] def minLabelComponents(
       s: org.apache.spark.sql.SparkSession,
       edges: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
@@ -923,9 +848,7 @@ object DedupOps {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // one count() materializes the round AND detects convergence —
       // exact under task retries (it reads the persisted result)
-      val rt0 = System.nanoTime()
       changed = next.filter(_._2._2).count()
-      if (ccDebug) System.err.println(f"[cc] round parts=${part.numPartitions} changed=$changed ${(System.nanoTime() - rt0) / 1e9}%6.3f s")
       lastPersisted.unpersist(false)
       lastPersisted = next
       cur = next.mapValues(_._1)
@@ -945,9 +868,9 @@ object DedupOps {
     "d06_dedup_clusters",
     (s, d) => {
       import s.implicits._
-      val labels = staged("d06_labels", d) { withAdvisoryCoalesce(s) {
+      val labels = materialize("d06_labels", d, Cache) { withAdvisoryCoalesce(s) {
         val pairs = d02Pairs(s, d)
-        val edges = staged("d06_edges", d) {
+        val edges = materialize("d06_edges", d, Cache) {
           pairs.unionByName(pairs.select($"doc_b".as("doc_a"), $"doc_a".as("doc_b")))
         }
         minLabelComponents(s, edges)
@@ -1325,7 +1248,7 @@ object DedupOps {
     val sup = SimilarityOps
       .s06CentsWith(s, d, g, s"s15_hsup_${k}_g${g}_s$strideG", strideG)
       .selectExpr("cid AS gid", "cv AS gcv")
-    val cents = stagedMaterialized(s"s15_hc_${k}_s$stride", d) {
+    val cents = materialize(s"s15_hc_${k}_s$stride", d, Checkpoint) {
       sup.createOrReplaceTempView("s15_hsup")
       s.sql(s"SELECT vec_id, v, nrm FROM s06_n WHERE vec_id % $stride = 0")
         .createOrReplaceTempView("s15_htrain")
@@ -1372,10 +1295,10 @@ object DedupOps {
           SELECT gid, cid,
                  transform(sort_array(collect_list(struct(dim, mc))), x -> x.mc) AS cv
           FROM m GROUP BY gid, cid"""))
-        org.apache.spark.sql.GraftSqlBridge.releaseCheckpointBlocks(cur)
+        release(cur)
         cur = next
       }
-      org.apache.spark.sql.GraftSqlBridge.releaseCheckpointBlocks(asg)
+      release(asg)
       cur
     }
     (sup, cents)
@@ -1493,8 +1416,7 @@ object DedupOps {
         KnnDiag.lastAssignKey = assignKey
         val twoLevelAssign = assignKey.startsWith("s15_hassign_") ||
           assignKey.startsWith("s15_tassign2")
-        stagedMaterialized(assignKey, d) {
-          roundCheckpoint(
+        materialize(assignKey, d, Checkpoint) {
             if (twoLevelAssign) s.sql(s"""
               WITH sup AS (SELECT collect_list(named_struct(
                              'cid', gid, 'cv', gcv,
@@ -1537,7 +1459,7 @@ object DedupOps {
                     FROM s06_n t CROSS JOIN cs)
               SELECT vec_id, pr.col.cid AS cluster,
                      CAST(pr.pos + 1 AS INT) AS rn
-              FROM a LATERAL VIEW posexplode(nc) pr"""))
+              FROM a LATERAL VIEW posexplode(nc) pr""")
         }.createOrReplaceTempView("s15_tassign")
         ("s15_tassign", s"s06_n@$variantTag")
     }
@@ -1547,8 +1469,8 @@ object DedupOps {
     val variant = if (nV.contains('@')) nV.substring(nV.indexOf('@') + 1) else ""
     val nView = if (nV.contains('@')) nV.substring(0, nV.indexOf('@')) else nV
     val stageKey = trainedK.fold("s15_knn")(k => s"s15_knn_t$k$variant")
-    val knn = stagedMaterialized(stageKey, d) {
-      roundCheckpoint(s.sql(s"""
+    val knn = materialize(stageKey, d, Checkpoint) {
+      s.sql(s"""
         WITH qp AS (SELECT a.vec_id AS src, a.cluster, n.v AS qv, n.nrm AS qn
                     FROM $assignV a JOIN $nView n ON n.vec_id = a.vec_id
                     WHERE a.rn <= ${SimilarityOps.ivfProbes}),
@@ -1563,7 +1485,7 @@ object DedupOps {
                                    ORDER BY cos DESC, nb) AS rn
               FROM sc)
         SELECT src, nb, cos, CAST(rn AS BIGINT) AS rn
-        FROM r WHERE rn <= $knnGraphK"""))
+        FROM r WHERE rn <= $knnGraphK""")
     }
     knn.createOrReplaceTempView("s15_knn")
     knn
@@ -1662,8 +1584,8 @@ object DedupOps {
       import s.implicits._
       import org.apache.spark.sql.functions.coalesce
       s15KnnFrame(s, d)
-      val labels = staged("d24_labels", d) { withAdvisoryCoalesce(s) {
-        val edges = staged("d24_edges", d) {
+      val labels = materialize("d24_labels", d, Cache) { withAdvisoryCoalesce(s) {
+        val edges = materialize("d24_edges", d, Cache) {
           // mutual ⇒ the reversed row exists with the bit-identical cos
           // (the dot fold multiplies the same term pairs in the same
           // order), so the filtered list is already symmetric — and for
@@ -1718,8 +1640,8 @@ object DedupOps {
   private[graft] def s15SurvivorKnn(
       s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
     SimilarityOps.s03Statics(s, d)
-    stagedMaterialized("d27_rknn", d) {
-      roundCheckpoint(s.sql(s"""
+    materialize("d27_rknn", d, Checkpoint) {
+      s.sql(s"""
         WITH sn AS (SELECT vec_id, v, nrm FROM s03_n WHERE NOT ($d27TombPred)),
         c AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM sn
               WHERE vec_id % 50 = 7 AND vec_id < 3200),
@@ -1742,7 +1664,7 @@ object DedupOps {
                                    ORDER BY cos DESC, nb) AS rn
               FROM sc)
         SELECT src, nb, cos, CAST(rn AS BIGINT) AS rn
-        FROM r WHERE rn <= $knnGraphK"""))
+        FROM r WHERE rn <= $knnGraphK""")
     }
   }
 
@@ -1780,8 +1702,8 @@ object DedupOps {
     "d27_semantic_delete_propagation",
     (s, d) => {
       s15KnnFrame(s, d)
-      staged("d27_lab", d) { d24.run(s, d) }.createOrReplaceTempView("d27_lab")
-      staged("d27_mem", d) {
+      materialize("d27_lab", d, Cache) { d24.run(s, d) }.createOrReplaceTempView("d27_lab")
+      materialize("d27_mem", d, Cache) {
         s.sql(s"""
           WITH tomb AS (SELECT vec_id FROM d27_lab WHERE $d27TombPred),
           aff AS (SELECT DISTINCT l.sem_cluster_id AS oc
@@ -1792,7 +1714,7 @@ object DedupOps {
       // delta edges: stored mutual τ-edges with BOTH endpoints surviving —
       // components are cluster-contained, so affected-cluster membership
       // of one endpoint implies the edge lives inside an affected cluster
-      val sedges = staged("d27_sedges", d) {
+      val sedges = materialize("d27_sedges", d, Cache) {
         s.sql(s"""
           SELECT k.src AS doc_a, k.nb AS doc_b
           FROM s15_knn k
@@ -1805,7 +1727,7 @@ object DedupOps {
         .createOrReplaceTempView("d27_dlab")
       // proof leg: genuine from-scratch rebuild over the survivors
       s15SurvivorKnn(s, d).createOrReplaceTempView("d27_rknn")
-      val redges = staged("d27_redges", d) {
+      val redges = materialize("d27_redges", d, Cache) {
         s.sql(s"""
           SELECT k.src AS doc_a, k.nb AS doc_b
           FROM d27_rknn k JOIN d27_rknn m ON m.src = k.nb AND m.nb = k.src

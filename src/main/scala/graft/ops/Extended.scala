@@ -168,7 +168,7 @@ object Extended {
       // Staged once (d19's DataFrame-composition pattern — NOT a
       // temp-view hop, which can defeat the cache fragment match), the
       // second consumer reads the (group, bucket)-width cache.
-      val c = staged("q66_c", d) {
+      val c = materialize("q66_c", d, Cache) {
         withViews(s, d, "lineitem")("""
           WITH h AS (SELECT l_returnflag AS g,
                        CAST(floor(l_extendedprice / 100) AS BIGINT) AS b,

@@ -942,7 +942,7 @@ object MultimodalOps {
       // PRESERVES output partitioning where the checkpoint leaf
       // surfaced UnknownPartitioning (StageProfile r17: the two
       // checkpoint barriers alone were ~0.9 s of m10's 3.8 s at sf0.1)
-      val cls = staged("m10_cls", d) {
+      val cls = materialize("m10_cls", d, Cache) {
         audioGranules(s, media)
           .groupBy($"dg")
           .agg(min($"doc_id").as("canonical_doc"),
@@ -956,12 +956,13 @@ object MultimodalOps {
       // classes are non-identifying; dropping them bounds the worst
       // bucket's quadratic pair cost (metadata-width window count —
       // ck0 is already partitioned by gkey, so no extra exchange)
-      // staged: ck feeds the denominators and BOTH self-join sides;
+      // checkpointed: ck feeds the denominators and BOTH self-join sides;
       // left lazy, the explode + pinned exchange + skew-cap window
-      // re-ran per reference (PlanAudit: 9 live Generates). The cached
-      // frame keeps ck0's gkey hash-partitioning, so the self-join
-      // below needs NO further exchange (the r16 checkpoint leaf lost
-      // it and the join re-shuffled both sides at scale)
+      // re-ran per reference (PlanAudit: 9 live Generates). The eager
+      // roundCheckpoint leaf reports UnknownPartitioning (plans/r17 m10
+      // after-plan, node 31), so ck0's gkey hash-partitioning is lost and
+      // the self-join below re-shuffles both sides at scale. Keeping it
+      // needs a partitioning-preserving checkpoint (ROADMAP.md open item 3)
       val ck = roundCheckpoint(ck0.withColumn("kc",
           count(lit(1)).over(org.apache.spark.sql.expressions.Window
             .partitionBy($"gkey")))

@@ -114,104 +114,112 @@ object Q {
   def oDateStr(expr: String): String =
     s"strftime(cast(($expr) as date), '%Y-%m-%d')"
 
-  /** Memoized, cached stage intermediates keyed by (name, data dir).
-    * Composed queries (d06 reusing d02's pairs, q40 reusing d06) share ONE
-    * cached copy instead of re-deriving and re-caching per call — without
-    * this, repeated runs leak orphaned InMemoryRelations (a DataFrame's
-    * cache survives view replacement until explicitly unpersisted). */
-  private val stagedMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  /** How [[materialize]] pins an intermediate. The rule: [[Checkpoint]]
+    * when lineage must be cut (iterative rounds, or an analyzer self-join
+    * of a lambda-bearing plan) or partitioning must survive a view
+    * re-analysis; [[Cache]] otherwise. */
+  sealed trait Materialization
+  /** Lazy `.cache()`: the first consuming job fills an InMemoryRelation,
+    * so materializing costs no barrier job of its own. */
+  case object Cache extends Materialization
+  /** Eager [[roundCheckpoint]]: the frame becomes a LogicalRDD leaf. An
+    * InMemoryRelation wrapper would lose the leaf's preserved output
+    * partitioning (InMemoryRelation.withOutput drops the partitioning
+    * attributes on Spark 4.1), so a checkpoint is never also cached. */
+  case object Checkpoint extends Materialization
 
-  def staged(key: String, dir: String)(build: => DataFrame): DataFrame = {
+  private final case class Entry(df: DataFrame, how: Materialization)
+
+  private val memo = new java.util.concurrent.ConcurrentHashMap[String, Entry]()
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.ops.Q")
+
+  /** Memoized stage intermediates keyed by (name, data dir, session).
+    * Composed queries (d06 reusing d02's pairs, q40 reusing d06) share ONE
+    * materialized copy instead of re-deriving and re-pinning it per call —
+    * without this, repeated runs leak orphaned InMemoryRelations (a
+    * DataFrame's cache survives view replacement until explicitly
+    * unpersisted) and checkpoint copies. A `Checkpoint` build that already
+    * returns a checkpoint (a loop whose last round checkpointed itself) is
+    * stored as is, not checkpointed a second time. */
+  def materialize(key: String, dir: String, how: Materialization)(
+      build: => DataFrame): DataFrame = {
     // keyed per active session: a memoized frame registers temp views in
     // its own session's catalog, so another live session must not reuse it
     val session = SparkSession.active
     val k = s"$key|$dir|${System.identityHashCode(session)}"
-    // NOT computeIfAbsent: build recurses into staged() for nested stages
-    // (d06 -> d02), and CHM's mapping function must not touch the map
-    // (same-bin collision => IllegalStateException("Recursive update"))
-    val existing = stagedMemo.get(k)
-    if (existing != null && !existing.sparkSession.sparkContext.isStopped) {
-      existing
+    // NOT computeIfAbsent: build recurses into materialize() for nested
+    // stages (d06 -> d02), and CHM's mapping function must not touch the
+    // map (same-bin collision => IllegalStateException("Recursive update"))
+    val existing = memo.get(k)
+    if (existing != null && !existing.df.sparkSession.sparkContext.isStopped) {
+      existing.df
     } else {
-      if (existing != null) stagedMemo.remove(k, existing)
-      val built = build.cache()
-      val prev = stagedMemo.putIfAbsent(k, built)
-      if (prev == null) built
-      else { built.unpersist(); prev } // lost a benign race; use the winner
-    }
-  }
-
-  /** [[staged]] without the extra `.cache()`: for intermediates that are
-    * ALREADY materialized (checkpoints), where wrapping an
-    * InMemoryRelation on top would discard the checkpoint's preserved
-    * output partitioning (the one property fusedBase exists to keep —
-    * InMemoryRelation.withOutput loses the partitioning attributes on
-    * Spark 4.1). Without memoization every call re-built and
-    * re-checkpointed a fresh copy whose blocks outlived the call; the
-    * memoized copy is shared per (key, dir, session) and its blocks are
-    * swept by [[releaseAllPersisted]] like any checkpoint. */
-  def stagedMaterialized(key: String, dir: String)(build: => DataFrame): DataFrame = {
-    val session = SparkSession.active
-    val k = s"$key|$dir|${System.identityHashCode(session)}"
-    val existing = stagedMemo.get(k)
-    if (existing != null && !existing.sparkSession.sparkContext.isStopped) {
-      existing
-    } else {
-      if (existing != null) stagedMemo.remove(k, existing)
-      val built = build
-      val prev = stagedMemo.putIfAbsent(k, built)
-      if (prev == null) { materializedKeys.add(k); built }
+      if (existing != null) memo.remove(k, existing)
+      val df = how match {
+        case Cache => build.cache()
+        case Checkpoint =>
+          val b = build
+          if (checkpointOf(b).isDefined) b else roundCheckpoint(b)
+      }
+      val entry = Entry(df, how)
+      val prev = memo.putIfAbsent(k, entry)
+      if (prev == null) df
       else {
-        // lost a benign race: the loser was eagerly checkpointed and is
-        // tracked by NOTHING — release its blocks now (staged()'s rule;
-        // without this a concurrent fusedBase pair pins a full events
-        // copy until releaseAllPersisted)
-        try checkpointRdd(built).foreach(_.unpersist(blocking = false))
-        catch { case _: Throwable => () }
-        prev
+        // lost a benign race: the loser is tracked by NOTHING — release it
+        // now (without this a concurrent fused_base pair pins a full
+        // events copy until releaseAllPersisted)
+        unpin(k, entry, blocking = false)
+        prev.df
       }
     }
   }
 
-  /** Keys of [[stagedMaterialized]] entries: their frames are backed by
-    * (local)checkpoint RDD BLOCKS, which `DataFrame.unpersist` does not
-    * release — [[clearStaged]] unpersists the underlying LogicalRDD for
-    * these so a clear never orphans a full checkpointed copy (round-10
-    * advice item). */
-  private val materializedKeys =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** The checkpoint RDD behind a materialized frame (LogicalRDD leaf),
-    * if any. */
-  private def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+  /** The checkpoint RDD a frame IS: its analyzed plan root is a
+    * LogicalRDD, the exact shape [[roundCheckpoint]] returns. ROOT-only,
+    * deliberately: a full-plan traversal also finds every LogicalRDD the
+    * frame merely READS — when s06's round-0 centroid frame became a
+    * SELECT over the shared checkpointed `normalized` leaf (round 12),
+    * releasing by that rule silently killed the shared checkpoint's
+    * blocks and every later consumer died with
+    * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. */
+  private def checkpointOf(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
+    df.queryExecution.analyzed match {
+      case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
+      case _ => None
     }
+
+  /** Drop the blocks behind a checkpointed frame (see [[checkpointOf]]):
+    * nothing unpersists them until the ContextCleaner notices the RDD is
+    * unreachable — too late for iterative algorithms that supersede a
+    * round per iteration. A frame that only reads a checkpoint is left
+    * alone. Only call this when the frame will never be read again:
+    * checkpoint lineage is truncated, so lost blocks are NOT recomputable. */
+  def release(df: DataFrame, blocking: Boolean = false): Unit =
+    checkpointOf(df).foreach(_.unpersist(blocking))
+
+  /** Cleanup only: a failed release is logged with its key, never raised. */
+  private def unpin(k: String, e: Entry, blocking: Boolean): Unit =
+    try if (!e.df.sparkSession.sparkContext.isStopped) e.how match {
+      case Cache => e.df.unpersist(blocking)
+      case Checkpoint => release(e.df, blocking)
+    }
+    catch { case t: Throwable => log.warn(s"releasing materialized $k failed", t) }
 
   /** Unpersist and forget every memoized intermediate (cold-cache runs).
     * Blocking: a non-blocking unpersist races the NEXT cold run — the old
     * blocks are still draining while the new run fills the store, and the
     * eviction/GC churn showed up as an unattributable 60% bench swing. */
   def clearStaged(): Unit = {
-    stagedMemo.forEach { (k, df) =>
-      try if (!df.sparkSession.sparkContext.isStopped) {
-        df.unpersist(blocking = true)
-        // checkpointed frames: the blocks live on the LogicalRDD, which
-        // plan-level unpersist cannot see
-        if (materializedKeys.contains(k))
-          checkpointRdd(df).foreach(_.unpersist(blocking = true))
-      }
-      catch { case _: Throwable => () }
-    }
-    stagedMemo.clear()
-    materializedKeys.clear()
+    memo.forEach((k, e) => unpin(k, e, blocking = true))
+    memo.clear()
   }
 
-  /** Drop EVERY persisted RDD still registered with the context — staged
-    * caches AND (local)checkpoint blocks from iterative queries (d06's
-    * rounds), which `clearStaged` can't see. Bench calls this between
-    * timed runs so each run starts from a genuinely empty block store.
+  /** Drop EVERY persisted RDD still registered with the context —
+    * materialized caches AND (local)checkpoint blocks from iterative
+    * queries (d06's rounds), which `clearStaged` can't see. Bench calls
+    * this between timed runs so each run starts from a genuinely empty
+    * block store.
     * Only safe when no live Dataset will be re-read: checkpoint lineage is
     * truncated, so swept blocks are unrecoverable. */
   def releaseAllPersisted(spark: SparkSession): Unit = {
@@ -220,7 +228,7 @@ object Q {
     if (!sc.isStopped)
       sc.getPersistentRDDs.values.foreach { rdd =>
         try rdd.unpersist(blocking = true)
-        catch { case _: Throwable => () }
+        catch { case t: Throwable => log.warn(s"releasing persisted RDD ${rdd.id} failed", t) }
       }
   }
 
@@ -247,9 +255,10 @@ object Q {
   }
 
   /** Per-round lineage truncation for iterative algorithms (d06 label
-    * propagation, s06 Lloyd iterations). Each round must read the previous
-    * round's BLOCKS, never its plan — without this the final plan
-    * re-derives all K rounds (each referencing the previous twice →
+    * propagation, s06 Lloyd iterations): the unkeyed form of
+    * [[Checkpoint]], for frames no later call reuses. Each round must read
+    * the previous round's BLOCKS, never its plan — without this the final
+    * plan re-derives all K rounds (each referencing the previous twice →
     * exponential recompute).
     *
     * Durability is configurable: when the session has a reliable

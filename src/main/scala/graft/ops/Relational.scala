@@ -439,7 +439,7 @@ object Relational {
           $"l_shipdate" < lit("1996-04-01").cast("timestamp"))
         .groupBy($"l_suppkey")
         .agg(sumd($"l_extendedprice" * (lit(1.0) - $"l_discount")).as("total_revenue"))
-      val revC = staged("q15_rev", d)(rev)
+      val revC = materialize("q15_rev", d, Cache)(rev)
       val maxRev = revC.agg(max($"total_revenue").as("max_rev"))
       revC.join(broadcast(maxRev), $"total_revenue" === $"max_rev")
         .join(broadcast(supp(s, d)), $"l_suppkey" === $"s_suppkey")
@@ -574,7 +574,7 @@ object Relational {
           // build side, so AQE broadcasts it and the orders exchange is
           // gone entirely; the Bloom's false positives are removed by the
           // exact join, so the result is exact regardless of the filter.
-          val bigC = staged("q18_big", d) { bigOrders }
+          val bigC = materialize("q18_big", d, Cache) { bigOrders }
           val bloom = bigC.stat.bloomFilter("l_orderkey", 1000000L, 0.01)
           val bbf = s.sparkContext.broadcast(bloom)
           val mightContain = org.apache.spark.sql.functions.udf(

@@ -857,7 +857,7 @@ object StreamingGate {
       s: SparkSession, d: String, provider: Option[String]): DataFrame = {
     import s.implicits._
     DedupOps.d06.run(s, d).createOrReplaceTempView("d23_lab")
-    val mem = Q.staged("d23_mem", d) {
+    val mem = Q.materialize("d23_mem", d, Q.Cache) {
       Q.withViews(s, d, "documents")("""
         SELECT l.cluster_id, l.doc_id, doc.n_chars
         FROM d23_lab l JOIN documents doc ON l.doc_id = doc.doc_id""")
@@ -1160,12 +1160,12 @@ object StreamingGate {
       s: SparkSession, d: String, provider: Option[String]): DataFrame = {
     import s.implicits._
     DedupOps.s15KnnFrame(s, d)
-    val lab = Q.staged("d28_lab", d) { DedupOps.d24.run(s, d) }
+    val lab = Q.materialize("d28_lab", d, Q.Cache) { DedupOps.d24.run(s, d) }
     lab.createOrReplaceTempView("d28_lab")
     // the stored cluster-contained mutual-τ edge list, keyed by cluster
     // (both endpoints share the label BY CONSTRUCTION — labels are the
     // components of exactly this edge set)
-    val edges = Q.staged("d28_edges", d) {
+    val edges = Q.materialize("d28_edges", d, Q.Cache) {
       s.sql(s"""
         SELECT la.sem_cluster_id AS cluster_id, k.src AS a, k.nb AS b
         FROM s15_knn k

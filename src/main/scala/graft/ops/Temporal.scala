@@ -518,11 +518,12 @@ object Temporal {
     * repartition+sort anyway; branch queries still run under it. */
   private def fusedBase(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
     graft.functions.GraftFunctions.register(s)
-    // memoized WITHOUT an extra cache() (stagedMaterialized): q65 and
+    // memoized as a Checkpoint, never also cached: q65 and
     // fusedEventSuite share one checkpointed base per (dir, session)
     // instead of materializing a fresh full-events copy per call, and an
-    // InMemoryRelation wrapper would lose the preserved partitioning
-    val base = Q.stagedMaterialized("fused_base", d) {
+    // InMemoryRelation wrapper would lose the preserved partitioning. The
+    // build checkpoints under AQE off itself; materialize keeps that leaf.
+    val base = materialize("fused_base", d, Checkpoint) {
       val key = "spark.sql.adaptive.enabled"
       val prev = s.conf.get(key)
       s.conf.set(key, "false")

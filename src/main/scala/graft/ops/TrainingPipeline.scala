@@ -13,7 +13,7 @@ object TrainingPipeline {
     "q40_training_pipeline",
     (s, d) => {
       import s.implicits._
-      val quality = Q.staged("q40_quality", d) {
+      val quality = Q.materialize("q40_quality", d, Q.Cache) {
         TextOps.t03.run(s, d).select($"doc_id", $"n_tokens", $"quality")
       }
       val dupes = DedupOps.d06.run(s, d)

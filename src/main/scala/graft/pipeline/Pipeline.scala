@@ -162,7 +162,7 @@ final class PipelineBuilder[O] private[pipeline] (
     // entry bound to a STOPPED session is rebuilt, not reused — a
     // shareable builder can outlive a session restart, and the stale
     // entry would both fail downstream and leak its cache registration
-    // (same guard as Q.staged)
+    // (same guard as Q.materialize)
     val memo = new java.util.concurrent.ConcurrentHashMap[SparkSession, Dataset[O]]()
     new PipelineBuilder[O](source,
       (s, c) => memo.compute(s, (ss, prev) =>

@@ -299,6 +299,19 @@ class QueriesSpec extends AnyFunSuite {
     assert(r == Seq(0.0, 0.5, 1.0))
   }
 
+  test("GraftFunctions.register is idempotent: a second call replaces nothing") {
+    val registry = spark.sessionState.functionRegistry
+    graft.functions.GraftFunctions.register(spark)
+    val idents = graft.functions.GraftExtensions.all.map(_._1)
+    val before = idents.map(i =>
+      (registry.lookupFunction(i).get, registry.lookupFunctionBuilder(i).get))
+    graft.functions.GraftFunctions.register(spark)
+    idents.zip(before).foreach { case (i, (info, builder)) =>
+      assert(registry.lookupFunction(i).get eq info, s"${i.funcName} re-registered")
+      assert(registry.lookupFunctionBuilder(i).get eq builder, s"${i.funcName} builder changed")
+    }
+  }
+
   for (q <- SparkEntry.registry) {
     test(s"${q.name} runs at sf0.001") {
       val df = q.run(spark, dir)

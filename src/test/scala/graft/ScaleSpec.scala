@@ -191,20 +191,71 @@ class ScaleSpec extends AnyFunSuite {
         s"q65 branch $tag lost or duplicated rows")
   }
 
-  test("clearStaged releases stagedMaterialized checkpoint blocks (no leak)") {
+  test("clearStaged releases materialized checkpoint and cache blocks (no leak)") {
     // round-10 advice: clearStaged unpersisted InMemoryRelations but not
-    // the localCheckpoint RDD blocks behind stagedMaterialized frames
+    // the localCheckpoint RDD blocks behind checkpointed memo entries
     // (fused_base) — each clear orphaned a full checkpointed events copy
     val dir = "/root/testdata/sf0.001"
     graft.ops.Q.clearStaged()
     val before = spark.sparkContext.getPersistentRDDs.keySet
     SparkEntry.queries("q65_fused_event_suite")(spark, dir).collect()
+    val withCheckpoint = spark.sparkContext.getPersistentRDDs.keySet
+    assert((withCheckpoint -- before).nonEmpty, "q65 left no checkpoint to test against")
+    val cached = graft.ops.Q.materialize("spec_cache", dir, graft.ops.Q.Cache) {
+      spark.range(100).toDF("x")
+    }
+    assert(cached.count() == 100)
     val during = spark.sparkContext.getPersistentRDDs.keySet
-    assert((during -- before).nonEmpty, "q65 left no checkpoint to test against")
+    assert((during -- withCheckpoint).nonEmpty, "the Cache entry persisted nothing")
     graft.ops.Q.clearStaged()
     val after = spark.sparkContext.getPersistentRDDs.keySet
     assert((after -- before).isEmpty,
       s"clearStaged leaked persisted RDDs: ids ${(after -- before).mkString(",")}")
+  }
+
+  test("materialize memoizes per (key, dir, session) until clearStaged") {
+    val dir = "spec-memo-dir" // only a memo key: nothing is read from it
+    var builds = 0
+    def get() = graft.ops.Q.materialize("spec_memo", dir, graft.ops.Q.Checkpoint) {
+      builds += 1
+      spark.range(10).toDF("x")
+    }
+    graft.ops.Q.clearStaged()
+    val first = get()
+    assert(get() eq first, "same (key, dir, session) built a second frame")
+    assert(builds == 1)
+    val otherDir = graft.ops.Q.materialize("spec_memo", s"$dir/other", graft.ops.Q.Checkpoint) {
+      spark.range(10).toDF("x")
+    }
+    assert(otherDir ne first, "a different dir reused the memoized frame")
+    graft.ops.Q.clearStaged()
+    val fresh = get()
+    assert(fresh ne first, "clearStaged kept the memoized frame")
+    assert(builds == 2)
+    assert(fresh.count() == 10)
+    graft.ops.Q.clearStaged()
+  }
+
+  test("release on a frame that only reads a shared checkpoint keeps it readable") {
+    // round 12: the any-leaf release rule killed s06's shared `normalized`
+    // checkpoint through a SELECT over it, and every later consumer died
+    // with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND
+    val shared = graft.ops.Q.roundCheckpoint(spark.range(1000).toDF("x"))
+    val rddId = shared.queryExecution.analyzed match {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+      case other => fail(s"roundCheckpoint returned no LogicalRDD root: $other")
+    }
+    def pinned = spark.sparkContext.getPersistentRDDs.contains(rddId)
+    assert(pinned)
+    val reader = shared.select(($"x" + 1).as("y"))
+    assert(reader.count() == 1000)
+    graft.ops.Q.release(reader, blocking = true)
+    assert(pinned, "releasing a reader unpersisted the checkpoint it reads")
+    assert(shared.agg(sum($"x")).collect()(0).getLong(0) == 499500L)
+    // the checkpoint itself IS released
+    graft.ops.Q.release(shared, blocking = true)
+    assert(!pinned,
+      "release left the checkpoint's own blocks persisted")
   }
 
   test("a gate query run AFTER q65 sees pristine events (fused view is scoped)") {
